@@ -1083,11 +1083,10 @@ def q_pyds_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     read stays lazy and distributed.
     """
     import math
-    import shutil
-    import tempfile
 
     import pyarrow.parquet as pq
 
+    from project_map_reduce_spark.plans.streaming_shaped import _finite_stream
     from project_map_reduce_spark.sources.pyds import DocPayloadDataSource
     from project_map_reduce_spark.sources.sinks import write_stream_idempotent
     from project_map_reduce_spark.tables import table_path
@@ -1097,13 +1096,7 @@ def q_pyds_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = pq.ParquetFile(path).metadata.num_rows
     chunk = max(1, math.ceil(n / 4))
 
-    from project_map_reduce_spark.plans.streaming_shaped import (
-        _session_output_dir,
-    )
-
-    sink = _session_output_dir("pmrs_q141_sink_")
-    tmp = tempfile.mkdtemp(prefix="pmrs_q141_")
-    try:
+    with _finite_stream(spark, "q_pyds_stream") as run:
         stream = (
             spark.readStream.format("pmrs_docpayload")
             .option("path", path)
@@ -1112,8 +1105,8 @@ def q_pyds_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         q = write_stream_idempotent(
             stream,
-            sink,
-            f"{tmp}/ckpt",
+            run.sink_dir,
+            run.ckpt,
             output_mode="append",
             trigger_available_now=False,
         )
@@ -1122,20 +1115,18 @@ def q_pyds_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         finally:
             q.stop()
         q.awaitTermination(60)
-        out = spark.read.option("basePath", sink).parquet(sink).select(
+        out = run.read_sink().select(
             "doc_id", "byte_len", "payload_md5", "chunk_id"
         )
-        # Premise guard for the oracle's chunk arithmetic: doc_id must
-        # be the file row position (dense 0..n-1) — footer+agg only.
-        lo_hi = out.agg(F.min("doc_id"), F.max("doc_id")).first()
-        if lo_hi[0] != 0 or lo_hi[1] != n - 1:
-            raise RuntimeError(
-                f"q_pyds_stream: doc_id not dense 0..{n - 1} "
-                f"(got {lo_hi}) — chunk_id oracle premise broke"
-            )
-        return out
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    # Premise guard for the oracle's chunk arithmetic: doc_id must be
+    # the file row position (dense 0..n-1) — footer+agg only.
+    lo_hi = out.agg(F.min("doc_id"), F.max("doc_id")).first()
+    if lo_hi[0] != 0 or lo_hi[1] != n - 1:
+        raise RuntimeError(
+            f"q_pyds_stream: doc_id not dense 0..{n - 1} "
+            f"(got {lo_hi}) — chunk_id oracle premise broke"
+        )
+    return out
 
 
 # ---------------------------------------------------------------------------
@@ -1621,14 +1612,13 @@ def q_jdbc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from project_map_reduce_spark.functions.det import sum6
+    from project_map_reduce_spark.streaming.transforms import ts_ltz
 
-    ev = (
+    ev = ts_ltz(
         load(spark, sf_dir, "events")
         .select("event_id", "ts", "user_id", "event_type", "value")
         .where(F.col("event_id") % 10 == 0)
     )
-    if ev.schema["ts"].dataType.simpleString() == "timestamp_ntz":
-        ev = ev.withColumn("ts", F.to_timestamp_ltz("ts"))
     lo, hi = ev.agg(F.min("event_id"), F.max("event_id")).first()
     if lo is None:
         raise ValueError("events slice is empty — nothing to round-trip")

@@ -16,14 +16,16 @@ window, Q101 the watermark-bounded stream-stream interval join, Q107
 the stream-static broadcast enrichment join, Q112 session-window state
 merging under append-mode finalization. All return a LAZY distributed
 plan over an executor-written sink — no driver gather anywhere
-(SURVEY §4.2).
+(SURVEY §4.2). Every finite stream here (and in warehouse.py/scans.py)
+runs through one runner, ``_finite_stream``: staging, the run's conf,
+and a sink + checkpoint in a session-scoped dir.
 """
 
 from __future__ import annotations
 
 import atexit
+import contextlib
 import datetime
-import os as _os
 import shutil
 import tempfile
 
@@ -32,14 +34,15 @@ from pyspark.sql import functions as F
 
 from project_map_reduce_spark.functions.det import r6d
 from project_map_reduce_spark.registry import fmt_doc, register
+from project_map_reduce_spark.sources.sinks import write_stream_idempotent
 from project_map_reduce_spark.streaming import transforms as X
 from project_map_reduce_spark.tables import load, local_rows
 
 
 def _session_output_dir(prefix: str) -> str:
     """A session-scoped persistent directory for a streaming query's
-    FINAL snapshot. The returned DataFrame lazily reads parquet from
-    here, so the data path stays distributed end-to-end (no driver
+    sink and checkpoint. The returned DataFrame lazily reads parquet
+    from here, so the data path stays distributed end-to-end (no driver
     collect of unbounded-key data — SURVEY §4.2's gather rule); cleanup
     happens at interpreter exit, after every consumer is done."""
     d = tempfile.mkdtemp(prefix=prefix)
@@ -50,8 +53,8 @@ def _session_output_dir(prefix: str) -> str:
 def _await_finite_stream(q, what: str) -> None:
     """Await an availableNow stream; fail LOUDLY on timeout — reading
     the sink of a half-finished stream would return partial totals (a
-    driver hash mismatch that looks like a logic bug), and the caller's
-    finally block would rmtree the source under a live query."""
+    driver hash mismatch that looks like a logic bug), and the runner's
+    exit would rmtree the source under a live query."""
     finished = q.awaitTermination(300)
     if q.exception():
         raise q.exception()
@@ -119,28 +122,93 @@ def _stage_batches(tmp: str, stages) -> str:
     return src
 
 
+class _FiniteStream:
+    """What a query body sees inside ``_finite_stream``: the staged
+    source, and a sink + checkpoint in a session-scoped dir."""
+
+    def __init__(self, spark: SparkSession, what: str, tmp: str, out: str, schema):
+        self.spark, self.what, self.tmp, self.schema = spark, what, tmp, schema
+        self.sink_dir, self.ckpt = f"{out}/sink", f"{out}/ckpt"
+
+    def stream(self) -> DataFrame:
+        """A fresh file-source stream over the staged batches, one
+        staged file (= one stage) per micro-batch."""
+        return (
+            self.spark.readStream.schema(self.schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(f"{self.tmp}/src")
+        )
+
+    def read_sink(self) -> DataFrame:
+        """Lazy distributed read of the idempotent sink, with its
+        ``batch_id`` directory key as a column."""
+        return self.spark.read.option("basePath", self.sink_dir).parquet(
+            self.sink_dir
+        )
+
+    def sink(self, df: DataFrame, output_mode: str) -> DataFrame:
+        """Run ``df`` to completion (availableNow) into the idempotent
+        per-batchId sink and return ``read_sink()``."""
+        q = write_stream_idempotent(
+            df, self.sink_dir, self.ckpt, output_mode=output_mode
+        )
+        _await_finite_stream(q, self.what)
+        return self.read_sink()
+
+
+@contextlib.contextmanager
+def _finite_stream(
+    spark: SparkSession, what: str, stages=(), *, parts=None, conf=None
+):
+    """The whole lifecycle of one finite streaming run, for a query
+    ``what``: stage ``stages`` ((name, DataFrame) pairs, ``_stage_batches``)
+    in a scratch dir, then set the run's Spark conf — ``parts`` state /
+    shuffle partitions (None leaves the session value) plus ``conf`` —
+    and yield a ``_FiniteStream``. Sink and checkpoint live in a
+    session-scoped dir, so the query can return a lazy read of the sink
+    (and of the checkpoint: the ``statestore`` source). On exit every
+    conf key is restored (unset again if it was unset) and the scratch
+    dir is removed — on success and on failure alike."""
+    settings = dict(conf or {})
+    if parts is not None:
+        settings["spark.sql.shuffle.partitions"] = str(parts)
+    prev = {k: spark.conf.get(k, None) for k in settings}
+    tmp = tempfile.mkdtemp(prefix=f"pmrs_{what}_")
+    try:
+        if stages:
+            _stage_batches(tmp, stages)
+        for k, v in settings.items():
+            spark.conf.set(k, v)
+        yield _FiniteStream(
+            spark,
+            what,
+            tmp,
+            _session_output_dir(f"pmrs_{what}_out_"),
+            stages[0][1].schema if stages else None,
+        )
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
 def _last_update_snapshot(
-    spark: SparkSession,
-    sink: str,
-    key_cols: list[str],
-    final_cols: list,
-    out_dir: str,
+    sink: DataFrame, key_cols: list[str], final_cols: list
 ) -> DataFrame:
     """Resolve an update-mode idempotent sink (one batch_id=N directory
     per micro-batch) to each key's LAST update projected to
-    ``final_cols``, written DISTRIBUTED to ``out_dir`` and returned as
-    a lazy parquet read. The executors do the window + write; nothing
-    unbounded touches the driver."""
-    snap = spark.read.option("basePath", sink).parquet(sink)
+    ``final_cols`` — a lazy window over the sink read, run by the
+    executors when the result is consumed; nothing unbounded touches
+    the driver."""
     last = Window.partitionBy(*key_cols).orderBy(F.desc("batch_id"))
-    (
-        snap.withColumn("__rn", F.row_number().over(last))
+    return (
+        sink.withColumn("__rn", F.row_number().over(last))
         .where(F.col("__rn") == 1)
         .select(*final_cols)
-        .write.mode("overwrite")
-        .parquet(out_dir)
     )
-    return spark.read.parquet(out_dir)
 
 
 @register(
@@ -260,8 +328,9 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_stream_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q90: end-to-end STREAMING correctness, driver-hash-checked.
 
-    The events table is staged as 3 parquet files and re-read as a
-    file-source stream (``maxFilesPerTrigger=1`` + available-now → 3
+    The events table is staged as 3 parquet files (``event_id % 3``
+    slices) and re-read as a file-source stream
+    (``maxFilesPerTrigger=1`` + available-now → 3
     micro-batches), flows through the custom stateful operator
     ``streaming/stateful.py::running_user_totals``
     (``applyInPandasWithState``, update mode: per-user running
@@ -272,56 +341,36 @@ def q_stream_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     The final accounting — each user's LAST update across batches —
     must equal the plain batch aggregate, which is exactly the oracle.
 
-    No driver gather anywhere in the data path (SURVEY §4.2): the
-    last-update resolution is an executor-side window + parquet write
-    into a session-scoped persistent dir, and the RETURNED DataFrame is
-    a lazy distributed read of that snapshot (FileScan, not a
-    LocalTableScan — asserted in tests/test_plan_audit.py). At 100 TB
-    downstream jobs read the same snapshot path; only the test-harness
-    staging dirs are temporary.
+    No driver gather anywhere in the data path (SURVEY §4.2): the sink
+    lives in a session-scoped persistent dir, and the RETURNED
+    DataFrame is a lazy last-update window over it (FileScan, not a
+    LocalTableScan — asserted in tests/test_streaming.py). At 100 TB
+    downstream jobs read the same sink path; only the test-harness
+    staging dir is temporary.
     """
-    from project_map_reduce_spark.sources.sinks import write_stream_idempotent
     from project_map_reduce_spark.streaming.stateful import running_user_totals
 
-    ev = load(spark, sf_dir, "events").select("user_id", "value")
-    tmp = tempfile.mkdtemp(prefix="pmrs_q90_")
-    out_dir = _session_output_dir("pmrs_q90_final_")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        src, sink, ckpt = (f"{tmp}/{d}" for d in ("src", "sink", "ckpt"))
-        ev.repartition(3).write.parquet(src)
-        # State-store partitioning follows shuffle.partitions at query
-        # start; 200 (vanilla default) means 200 state dirs per batch
-        # for 150 keys at sf0.01 — but pinning it LOW caps the stateful
-        # operator's parallelism at every scale (a flat 4 made the sf10
-        # probe run the Python state op 4-wide on a 32-core host). Pin
-        # to cores: bounded dir overhead, full parallelism.
-        spark.conf.set(
-            "spark.sql.shuffle.partitions",
-            str(spark.sparkContext.defaultParallelism),
+    ev = load(spark, sf_dir, "events").select("event_id", "user_id", "value")
+    stages = [
+        (f"c{i}", ev.where(F.col("event_id") % 3 == i).select("user_id", "value"))
+        for i in range(3)
+    ]
+    # State-store partitioning follows shuffle.partitions at query
+    # start; 200 (vanilla default) means 200 state dirs per batch for
+    # 150 keys at sf0.01 — but pinning it LOW caps the stateful
+    # operator's parallelism at every scale (a flat 4 made the sf10
+    # probe run the Python state op 4-wide on a 32-core host). Pin to
+    # cores: bounded dir overhead, full parallelism.
+    cores = spark.sparkContext.defaultParallelism
+    with _finite_stream(spark, "q_stream_totals", stages, parts=cores) as run:
+        sink = run.sink(
+            running_user_totals(run.stream(), evict_idle=False), "update"
         )
-        stream = (
-            spark.readStream.schema("user_id bigint, value double")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        q = write_stream_idempotent(
-            running_user_totals(stream, evict_idle=False),
-            sink,
-            ckpt,
-            output_mode="update",
-        )
-        _await_finite_stream(q, "q_stream_totals")
-        return _last_update_snapshot(
-            spark,
-            sink,
-            ["user_id"],
-            ["user_id", "n_events", r6d(F.col("sum_value"), "sum_value")],
-            out_dir,
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        shutil.rmtree(tmp, ignore_errors=True)
+    return _last_update_snapshot(
+        sink,
+        ["user_id"],
+        ["user_id", "n_events", r6d(F.col("sum_value"), "sum_value")],
+    )
 
 
 # State-partition count for the evict-on-finalize / stream-stream-join
@@ -329,10 +378,9 @@ def q_stream_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
 # r11/r12 A/Bs pinned 8 (beat cores at every probed SF — per-batch
 # checkpoint commits scale with partitions × stores × batches); the
 # round-14 re-A/B after the staging fix confirmed the pin (see
-# OPTIMIZATION_r14.md). Env-overridable so the A/B is reproducible
-# without editing query bodies; on a cluster this is a deploy-time conf
-# sized to executors.
-_STREAM_STATE_PARTS = _os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTS", "8")
+# OPTIMIZATION_r14.md). On a cluster this is a deploy-time conf sized
+# to executors.
+_STREAM_STATE_PARTS = 8
 
 _WM_DELAY_MIN = 45
 _LATE_MOD, _LATE_RES = 10, 7
@@ -389,44 +437,30 @@ def q_watermark_late(spark: SparkSession, sf_dir: str) -> DataFrame:
     is robust to that implementation detail changing.
 
     Scale shape: identical to q_stream_totals — O(open windows) state,
-    idempotent per-batch sink, last-update resolution and final snapshot
-    write all executor-side; the returned DataFrame is a lazy parquet
-    read (no driver gather, SURVEY §4.2).
+    idempotent per-batch sink in a session-scoped dir; the returned
+    DataFrame is a lazy last-update window over that sink (no driver
+    gather, SURVEY §4.2).
     """
-    from project_map_reduce_spark.sources.sinks import write_stream_idempotent
-
-    ev = load(spark, sf_dir, "events").select("event_id", "ts", "value")
-    if ev.schema["ts"].dataType.simpleString() == "timestamp_ntz":
-        ev = ev.withColumn("ts", F.to_timestamp_ltz("ts"))
+    ev = X.ts_ltz(load(spark, sf_dir, "events").select("event_id", "ts", "value"))
     is_late = F.col("event_id") % _LATE_MOD == _LATE_RES
-
-    tmp = tempfile.mkdtemp(prefix="pmrs_q98_")
-    out_dir = _session_output_dir("pmrs_q98_final_")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        # All on-time rows MUST land in one micro-batch (watermark is 0
-        # while it runs) — the oracle models exactly one advancement.
-        src = _stage_batches(tmp, (
-            ("ontime", ev.where(~is_late).select("ts", "value")),
-            ("spacer", ev.where(F.lit(False)).select("ts", "value")),
-            ("late", ev.where(is_late).select("ts", "value")),
-        ))
-
-        # Unlike q_stream_totals (state O(users) — pinned to cores),
-        # this aggregation's state is O(open windows): a few hundred
-        # keys at ANY corpus size, and the map-side partial agg
-        # parallelism follows the FILE partitions, not this. A small
-        # constant is the right setting — cores-many state partitions
-        # only add checkpoint overhead (measured +2 s at sf0.1 and sf1,
-        # flat at sf10, with zero scale benefit).
-        spark.conf.set("spark.sql.shuffle.partitions", "4")
-        stream = (
-            spark.readStream.schema("ts timestamp, value double")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
+    # All on-time rows MUST land in one micro-batch (watermark is 0
+    # while it runs) — the oracle models exactly one advancement.
+    stages = [
+        ("ontime", ev.where(~is_late).select("ts", "value")),
+        ("spacer", ev.where(F.lit(False)).select("ts", "value")),
+        ("late", ev.where(is_late).select("ts", "value")),
+    ]
+    # Unlike q_stream_totals (state O(users) — pinned to cores), this
+    # aggregation's state is O(open windows): a few hundred keys at ANY
+    # corpus size, and the map-side partial agg parallelism follows the
+    # FILE partitions, not this. A small constant is the right setting
+    # — cores-many state partitions only add checkpoint overhead
+    # (measured +2 s at sf0.1 and sf1, flat at sf10, with zero scale
+    # benefit).
+    with _finite_stream(spark, "q_watermark_late", stages, parts=4) as run:
         agg = (
-            stream.withWatermark("ts", f"{_WM_DELAY_MIN} minutes")
+            run.stream()
+            .withWatermark("ts", f"{_WM_DELAY_MIN} minutes")
             .groupBy(F.window("ts", "1 hour"))
             .agg(
                 F.count(F.lit(1)).alias("n_events"),
@@ -439,27 +473,19 @@ def q_watermark_late(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "sum_value",
             )
         )
-        q = write_stream_idempotent(
-            agg, f"{tmp}/sink", f"{tmp}/ckpt", output_mode="update"
-        )
-        _await_finite_stream(q, "q_watermark_late")
-        return _last_update_snapshot(
-            spark,
-            f"{tmp}/sink",
-            ["window_start"],
-            [
-                # session zone is UTC, so the LTZ→NTZ cast is value-exact
-                # and the snapshot hashes like every batch-path timestamp
-                F.col("window_start").cast("timestamp_ntz").alias("window_start"),
-                F.col("window_end").cast("timestamp_ntz").alias("window_end"),
-                "n_events",
-                "sum_value",
-            ],
-            out_dir,
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        shutil.rmtree(tmp, ignore_errors=True)
+        sink = run.sink(agg, "update")
+    return _last_update_snapshot(
+        sink,
+        ["window_start"],
+        [
+            # session zone is UTC, so the LTZ→NTZ cast is value-exact
+            # and the snapshot hashes like every batch-path timestamp
+            F.col("window_start").cast("timestamp_ntz").alias("window_start"),
+            F.col("window_end").cast("timestamp_ntz").alias("window_end"),
+            "n_events",
+            "sum_value",
+        ],
+    )
 
 
 fmt_doc(
@@ -527,62 +553,35 @@ def q_stream_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: state is O(keys per watermark horizon), NOT O(all
     keys ever) — the property that lets the dedup run forever on an
-    unbounded stream; append-mode idempotent sink; final snapshot is an
-    executor-side parquet write returned as a lazy read (SURVEY §4.2).
+    unbounded stream; append-mode idempotent sink in a session-scoped
+    dir, returned as a lazy read (SURVEY §4.2).
     """
-    from project_map_reduce_spark.sources.sinks import write_stream_idempotent
-
-    ev = load(spark, sf_dir, "events").select("event_id", "ts", "value")
-    if ev.schema["ts"].dataType.simpleString() == "timestamp_ntz":
-        ev = ev.withColumn("ts", F.to_timestamp_ltz("ts"))
+    ev = X.ts_ltz(load(spark, sf_dir, "events").select("event_id", "ts", "value"))
     redeliver = ev.where(F.col("event_id") % _DD_MOD == _DD_RES).withColumn(
         "ts", F.col("ts") + F.expr(f"INTERVAL {_DD_REDELIVER_H} HOURS")
     )
-
-    tmp = tempfile.mkdtemp(prefix="pmrs_q100_")
-    out_dir = _session_output_dir("pmrs_q100_final_")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        src = _stage_batches(tmp, (
-            ("originals", ev),
-            ("spacer", ev.where(F.lit(False))),
-            ("redeliver", redeliver),
-        ))
-
-        # dedup state is O(keys in horizon) — grows with data: pin the
-        # state partitioning to cores (same reasoning as q_stream_totals)
-        spark.conf.set(
-            "spark.sql.shuffle.partitions",
-            str(spark.sparkContext.defaultParallelism),
-        )
-        stream = (
-            spark.readStream.schema("event_id bigint, ts timestamp, value double")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        deduped = stream.withWatermark(
+    stages = [
+        ("originals", ev),
+        ("spacer", ev.where(F.lit(False))),
+        ("redeliver", redeliver),
+    ]
+    # dedup state is O(keys in horizon) — grows with data: pin the
+    # state partitioning to cores (same reasoning as q_stream_totals)
+    cores = spark.sparkContext.defaultParallelism
+    with _finite_stream(
+        spark, "q_stream_dedup_watermark", stages, parts=cores
+    ) as run:
+        deduped = run.stream().withWatermark(
             "ts", f"{_DD_DELAY_MIN} minutes"
         ).dropDuplicatesWithinWatermark(["event_id"])
-        q = write_stream_idempotent(
-            deduped, f"{tmp}/sink", f"{tmp}/ckpt", output_mode="append"
-        )
-        _await_finite_stream(q, "q_stream_dedup_watermark")
-        # append-mode sink: the emitted rows ARE the result — no
-        # last-update resolution needed, just drop the batch_id dir key
-        snap = spark.read.option("basePath", f"{tmp}/sink").parquet(f"{tmp}/sink")
-        (
-            snap.select(
-                "event_id",
-                F.col("ts").cast("timestamp_ntz").alias("ts"),
-                F.round("value", 6).alias("value"),
-            )
-            .write.mode("overwrite")
-            .parquet(out_dir)
-        )
-        return spark.read.parquet(out_dir)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        shutil.rmtree(tmp, ignore_errors=True)
+        sink = run.sink(deduped, "append")
+    # append-mode sink: the emitted rows ARE the result — no
+    # last-update resolution needed, just drop the batch_id dir key
+    return sink.select(
+        "event_id",
+        F.col("ts").cast("timestamp_ntz").alias("ts"),
+        F.round("value", 6).alias("value"),
+    )
 
 
 fmt_doc(
@@ -592,6 +591,47 @@ fmt_doc(
     d=_DD_DELAY_MIN,
     h=_DD_REDELIVER_H,
 )
+
+
+def _event_time_chunks(ev: DataFrame) -> tuple[list, datetime.datetime]:
+    """Split ``ev`` into 3 CONTIGUOUS EVENT-TIME range chunks, oldest
+    first — bounds from one min/max job, a distributed range split, no
+    global sort. Returns the ``(name, DataFrame)`` stages and the max
+    event time; fails fast on an empty table (before any staging)."""
+    lo, hi = ev.agg(F.min("ts"), F.max("ts")).first()
+    if lo is None or hi is None:
+        raise ValueError("events table is empty — nothing to stream")
+    span_us = max(1, int((hi - lo).total_seconds() * 1_000_000))
+    frac = F.timestamp_diff("MICROSECOND", F.lit(lo), F.col("ts")) / F.lit(span_us)
+    chunk = F.least(F.floor(frac * 3).cast("int"), F.lit(2))
+    return [(f"c{i}", ev.where(chunk == i)) for i in range(3)], hi
+
+
+def _error_purchase_join(run: _FiniteStream, how: str) -> DataFrame:
+    """(err_id, pur_id): purchases within 1 hour after an error by the
+    same user, as a stream-stream interval join of two streams over the
+    staged events, each with a 2-hour watermark bounding its state."""
+
+    def side(event_type: str, p: str) -> DataFrame:
+        return (
+            run.stream()
+            .where(F.col("event_type") == event_type)
+            .select(
+                F.col("user_id").alias(f"{p}_user"),
+                F.col("event_id").alias(f"{p}_id"),
+                F.col("ts").alias(f"{p}_ts"),
+            )
+            .withWatermark(f"{p}_ts", "2 hours")
+        )
+
+    return side("error", "err").join(
+        side("purchase", "pur"),
+        F.expr(
+            "err_user = pur_user AND pur_ts > err_ts "
+            "AND pur_ts <= err_ts + INTERVAL 1 HOUR"
+        ),
+        how,
+    ).select("err_id", "pur_id")
 
 
 @register(
@@ -623,99 +663,28 @@ def q_join_interval_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     buffer holds O(users · 3 h) rows at any instant, which is what
     makes the join runnable forever on an unbounded stream.
 
-    Scale shape: append-mode idempotent sink; executor-written snapshot
+    Scale shape: append-mode idempotent sink in a session-scoped dir,
     returned as a lazy read (SURVEY §4.2); state partition count is the
     measured-best harness value (see the in-body comment — a
     stream-stream join carries TWO state stores per partition, so
     checkpoint-commit overhead, not compute, dominates here).
     """
-    from project_map_reduce_spark.sources.sinks import write_stream_idempotent
-
-    ev = load(spark, sf_dir, "events").select(
-        "event_id", "ts", "user_id", "event_type"
+    ev = X.ts_ltz(
+        load(spark, sf_dir, "events").select("event_id", "ts", "user_id", "event_type")
     )
-    if ev.schema["ts"].dataType.simpleString() == "timestamp_ntz":
-        ev = ev.withColumn("ts", F.to_timestamp_ltz("ts"))
-    lo, hi = ev.agg(F.min("ts"), F.max("ts")).first()
-    if lo is None or hi is None:
-        raise ValueError("events table is empty — nothing to stream-join")
-    span_us = max(1, int((hi - lo).total_seconds() * 1_000_000))
-
-    tmp = tempfile.mkdtemp(prefix="pmrs_q101_")
-    out_dir = _session_output_dir("pmrs_q101_final_")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        frac = (
-            F.timestamp_diff("MICROSECOND", F.lit(lo), F.col("ts"))
-            / F.lit(span_us)
-        )
-        chunk = F.least(F.floor(frac * 3).cast("int"), F.lit(2))
-        src = _stage_batches(tmp, tuple(
-            (
-                f"c{i}",
-                ev.withColumn("__c", chunk)
-                .where(F.col("__c") == i)
-                .drop("__c"),
-            )
-            for i in range(3)
-        ))
-
-        # A stream-stream join keeps TWO state stores per partition, so
-        # per-batch checkpoint commits scale with partitions x stores x
-        # batches and dominate at harness scale: A/B measured 8
-        # partitions FASTER than cores even at sf10 (25.6 s vs 34.4 s,
-        # 10 M events) while staying sublinear (sf0.1 5.6 s, sf1 7.0 s).
-        # On a real cluster this is a deploy-time conf sized to
-        # executors; the code pins the measured-best harness value.
-        spark.conf.set("spark.sql.shuffle.partitions", _STREAM_STATE_PARTS)
-
-        def src_stream():
-            return (
-                spark.readStream.schema(
-                    "event_id bigint, ts timestamp, user_id bigint, "
-                    "event_type string"
-                )
-                .option("maxFilesPerTrigger", 1)
-                .parquet(src)
-            )
-
-        err = (
-            src_stream()
-            .where(F.col("event_type") == "error")
-            .select(
-                F.col("user_id").alias("e_user"),
-                F.col("event_id").alias("err_id"),
-                F.col("ts").alias("err_ts"),
-            )
-            .withWatermark("err_ts", "2 hours")
-        )
-        pur = (
-            src_stream()
-            .where(F.col("event_type") == "purchase")
-            .select(
-                F.col("user_id").alias("p_user"),
-                F.col("event_id").alias("pur_id"),
-                F.col("ts").alias("pur_ts"),
-            )
-            .withWatermark("pur_ts", "2 hours")
-        )
-        joined = err.join(
-            pur,
-            F.expr(
-                "e_user = p_user AND pur_ts > err_ts "
-                "AND pur_ts <= err_ts + INTERVAL 1 HOUR"
-            ),
-        ).select("err_id", "pur_id")
-        q = write_stream_idempotent(
-            joined, f"{tmp}/sink", f"{tmp}/ckpt", output_mode="append"
-        )
-        _await_finite_stream(q, "q_join_interval_stream")
-        snap = spark.read.option("basePath", f"{tmp}/sink").parquet(f"{tmp}/sink")
-        snap.select("err_id", "pur_id").write.mode("overwrite").parquet(out_dir)
-        return spark.read.parquet(out_dir)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        shutil.rmtree(tmp, ignore_errors=True)
+    stages, _hi = _event_time_chunks(ev)
+    # A stream-stream join keeps TWO state stores per partition, so
+    # per-batch checkpoint commits scale with partitions x stores x
+    # batches and dominate at harness scale: A/B measured 8 partitions
+    # FASTER than cores even at sf10 (25.6 s vs 34.4 s, 10 M events)
+    # while staying sublinear (sf0.1 5.6 s, sf1 7.0 s). On a real
+    # cluster this is a deploy-time conf sized to executors; the code
+    # pins the measured-best harness value.
+    with _finite_stream(
+        spark, "q_join_interval_stream", stages, parts=_STREAM_STATE_PARTS
+    ) as run:
+        sink = run.sink(_error_purchase_join(run, "inner"), "append")
+    return sink.select("err_id", "pur_id")
 
 
 @register(
@@ -752,8 +721,6 @@ def q_stream_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the session-persistent sink — downstream jobs read the same
     path; no driver gather (SURVEY §4.2).
     """
-    from project_map_reduce_spark.sources.sinks import write_stream_idempotent
-
     ev = load(spark, sf_dir, "events").select("event_id", "user_id", "value")
     dim = (
         load(spark, sf_dir, "customer")
@@ -763,37 +730,19 @@ def q_stream_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("c_custkey", "n_name")
     )
-    tmp = tempfile.mkdtemp(prefix="pmrs_q107_")
-    sink = _session_output_dir("pmrs_q107_sink_")
-    try:
-        src = _stage_batches(tmp, tuple(
-            (
-                f"c{i}",
-                ev.where(F.col("event_id") % 3 == i).select(
-                    "user_id", "value"
-                ),
-            )
-            for i in range(3)
-        ))
-        stream = (
-            spark.readStream.schema("user_id bigint, value double")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        enriched = stream.join(
+    stages = [
+        (f"c{i}", ev.where(F.col("event_id") % 3 == i).select("user_id", "value"))
+        for i in range(3)
+    ]
+    with _finite_stream(spark, "q_stream_enrich", stages) as run:
+        enriched = run.stream().join(
             F.broadcast(dim), F.col("user_id") == F.col("c_custkey")
         ).select("n_name", "value")
-        q = write_stream_idempotent(
-            enriched, sink, f"{tmp}/ckpt", output_mode="append"
-        )
-        _await_finite_stream(q, "q_stream_enrich")
-        snap = spark.read.option("basePath", sink).parquet(sink)
-        return snap.groupBy("n_name").agg(
-            F.count(F.lit(1)).alias("n_events"),
-            r6d(F.sum("value"), "sum_value"),
-        )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        sink = run.sink(enriched, "append")
+    return sink.groupBy("n_name").agg(
+        F.count(F.lit(1)).alias("n_events"),
+        r6d(F.sum("value"), "sum_value"),
+    )
 
 
 _SS_GAP_MIN = 30  # session gap AND watermark delay
@@ -833,6 +782,61 @@ def _session_hi_cut(ev0: DataFrame) -> tuple:
     # so the contract must not ride on the positional order of the two
     # aggregate expressions.
     return (row["hi"], row["cut"])
+
+
+def _session_stages(
+    spark: SparkSession, sf_dir: str, what: str, *, flush: bool
+) -> list:
+    """Stages for the session-stream queries: [early] → [empty spacer]
+    → [late], split at a cut chosen INSIDE a session (``_session_hi_cut``
+    — the earliest strictly-increasing same-user event pair closer than
+    the gap, so at least one session straddles the micro-batches; the
+    hi of a degenerate corpus without such a pair), and with ``flush``
+    a sentinel row (user −1, ``_SS_FLUSH_DAYS`` days past the max ts)
+    plus a second spacer that finalize every real session."""
+    ev0 = X.ts_ltz(
+        load(spark, sf_dir, "events").select("user_id", "ts", "value", "event_id")
+    )
+    hi, cut = _session_hi_cut(ev0)
+    if hi is None:
+        raise ValueError(f"{what}: events table is empty")
+    if cut is None:  # degenerate corpus: no in-session pair anywhere
+        cut = hi
+    ev = ev0.select("user_id", "ts", "value")
+    stages = [
+        ("early", ev.where(F.col("ts") <= F.lit(cut))),
+        ("spacer", ev.where(F.lit(False))),
+        ("late", ev.where(F.col("ts") > F.lit(cut))),
+    ]
+    if flush:
+        sentinel_ts = hi + datetime.timedelta(days=_SS_FLUSH_DAYS)
+        stages += [
+            ("flush", _literal_rows(
+                spark, [(-1, sentinel_ts, 0.0)],
+                "user_id bigint, ts timestamp, value double",
+            )),
+            ("spacer2", ev.where(F.lit(False))),
+        ]
+    return stages
+
+
+def _session_window_agg(stream: DataFrame) -> DataFrame:
+    """Per-user ``session_window`` count/sum (gap = watermark delay)."""
+    return (
+        stream.withWatermark("ts", f"{_SS_GAP_MIN} minutes")
+        .groupBy(F.session_window("ts", f"{_SS_GAP_MIN} minutes"), "user_id")
+        .agg(
+            F.count(F.lit(1)).alias("n_events"),
+            r6d(F.sum("value"), "sum_value"),
+        )
+        .select(
+            "user_id",
+            F.col("session_window.start").alias("session_start"),
+            F.col("session_window.end").alias("session_end"),
+            "n_events",
+            "sum_value",
+        )
+    )
 
 
 @register(
@@ -900,79 +904,23 @@ def q_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     case. The returned DataFrame is a lazy read over the
     session-persistent append sink (SURVEY §4.2 — no driver gather).
     """
-    from project_map_reduce_spark.sources.sinks import write_stream_idempotent
-
-    ev0 = load(spark, sf_dir, "events").select("user_id", "ts", "value", "event_id")
-    if ev0.schema["ts"].dataType.simpleString() == "timestamp_ntz":
-        ev0 = ev0.withColumn("ts", F.to_timestamp_ltz("ts"))
     # The split point must fall INSIDE some session or the run would
     # never exercise cross-batch merging (at sf0.001 the naive
     # event-time midpoint lands between sessions — checked by
-    # tests/test_streaming.py's premise test): cut at the earliest
-    # strictly-increasing same-user event pair closer than the gap, so
-    # at least that session straddles the two micro-batches. hi and cut
-    # come from ONE fused plan-build job (_session_hi_cut).
-    hi, cut = _session_hi_cut(ev0)
-    if hi is None:
-        raise ValueError("q_stream_sessions: events table is empty")
-    if cut is None:  # degenerate corpus: no in-session pair anywhere
-        cut = hi
-    ev = ev0.select("user_id", "ts", "value")
-    sentinel_ts = hi + datetime.timedelta(days=_SS_FLUSH_DAYS)
-
-    tmp = tempfile.mkdtemp(prefix="pmrs_q112_")
-    sink = _session_output_dir("pmrs_q112_sink_")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        flush = _literal_rows(
-            spark, [(-1, sentinel_ts, 0.0)],
-            "user_id bigint, ts timestamp, value double",
-        )
-        src = _stage_batches(tmp, (
-            ("early", ev.where(F.col("ts") <= F.lit(cut))),
-            ("spacer", ev.where(F.lit(False))),
-            ("late", ev.where(F.col("ts") > F.lit(cut))),
-            ("flush", flush),
-            ("spacer2", ev.where(F.lit(False))),
-        ))
-        spark.conf.set("spark.sql.shuffle.partitions", _STREAM_STATE_PARTS)
-        stream = (
-            spark.readStream.schema("user_id bigint, ts timestamp, value double")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        agg = (
-            stream.withWatermark("ts", f"{_SS_GAP_MIN} minutes")
-            .groupBy(
-                F.session_window("ts", f"{_SS_GAP_MIN} minutes"), "user_id"
-            )
-            .agg(
-                F.count(F.lit(1)).alias("n_events"),
-                r6d(F.sum("value"), "sum_value"),
-            )
-            .select(
-                "user_id",
-                F.col("session_window.start").alias("session_start"),
-                F.col("session_window.end").alias("session_end"),
-                "n_events",
-                "sum_value",
-            )
-        )
-        q = write_stream_idempotent(
-            agg, sink, f"{tmp}/ckpt", output_mode="append"
-        )
-        _await_finite_stream(q, "q_stream_sessions")
-        snap = spark.read.option("basePath", sink).parquet(sink)
-        return snap.where(F.col("user_id") != -1).select(
-            "user_id",
-            F.col("session_start").cast("timestamp_ntz").alias("session_start"),
-            F.col("session_end").cast("timestamp_ntz").alias("session_end"),
-            "n_events",
-            "sum_value",
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        shutil.rmtree(tmp, ignore_errors=True)
+    # tests/test_streaming.py's premise test); hi and cut come from ONE
+    # fused plan-build job (_session_hi_cut).
+    stages = _session_stages(spark, sf_dir, "q_stream_sessions", flush=True)
+    with _finite_stream(
+        spark, "q_stream_sessions", stages, parts=_STREAM_STATE_PARTS
+    ) as run:
+        sink = run.sink(_session_window_agg(run.stream()), "append")
+    return sink.where(F.col("user_id") != -1).select(
+        "user_id",
+        F.col("session_start").cast("timestamp_ntz").alias("session_start"),
+        F.col("session_end").cast("timestamp_ntz").alias("session_end"),
+        "n_events",
+        "sum_value",
+    )
 
 
 fmt_doc(q_stream_sessions, gap=_SS_GAP_MIN, flush_days=_SS_FLUSH_DAYS)
@@ -1053,97 +1001,50 @@ def q_stream_state_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     transformWithState when the logic genuinely needs timers or
     multiple state variables, and stage it as FEW LARGE batches.
     """
-    from project_map_reduce_spark.sources.sinks import write_stream_idempotent
     from project_map_reduce_spark.streaming.transform_state import (
         ensure_protobuf_env,
         restore_env,
         timer_sessions,
     )
 
-    ev0 = load(spark, sf_dir, "events").select("user_id", "ts", "value", "event_id")
-    if ev0.schema["ts"].dataType.simpleString() == "timestamp_ntz":
-        ev0 = ev0.withColumn("ts", F.to_timestamp_ltz("ts"))
-    # hi and cut from ONE fused plan-build job (_session_hi_cut).
-    hi, cut = _session_hi_cut(ev0)
-    if hi is None:
-        raise ValueError("q_stream_state_sessions: events table is empty")
-    if cut is None:
-        cut = hi
-    ev = ev0.select("user_id", "ts", "value")
-    sentinel_ts = hi + datetime.timedelta(days=_SS_FLUSH_DAYS)
-
-    tmp = tempfile.mkdtemp(prefix="pmrs_q134_")
-    sink = _session_output_dir("pmrs_q134_sink_")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    prov_key = "spark.sql.streaming.stateStore.providerClass"
-    prev_prov = spark.conf.get(prov_key, None)
-    # Changelog checkpointing (round-14, guide §1.2 per-batch cost):
-    # without it every RocksDB commit uploads a full SST snapshot of
-    # every store instance per micro-batch; with it, commits write the
-    # batch's key changelog and snapshots move to the background
-    # maintenance thread — the recovery contract is unchanged (replay =
-    # last snapshot + changelogs; crash-replay stays pinned by
-    # tests/test_transform_state.py).
-    clog_key = (
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
-    )
-    prev_clog = spark.conf.get(clog_key, None)
+    stages = _session_stages(spark, sf_dir, "q_stream_state_sessions", flush=True)
+    store = "spark.sql.streaming.stateStore"
+    conf = {
+        f"{store}.providerClass": "org.apache.spark.sql.execution."
+        "streaming.state.RocksDBStateStoreProvider",
+        # Changelog checkpointing (round-14, guide §1.2 per-batch cost):
+        # without it every RocksDB commit uploads a full SST snapshot of
+        # every store instance per micro-batch; with it, commits write
+        # the batch's key changelog and snapshots move to the background
+        # maintenance thread — the recovery contract is unchanged
+        # (replay = last snapshot + changelogs; crash-replay stays
+        # pinned by tests/test_transform_state.py).
+        f"{store}.rocksdb.changelogCheckpointing.enabled": "true",
+    }
     prev_env = ensure_protobuf_env(spark)
     try:
-        flush = _literal_rows(
-            spark, [(-1, sentinel_ts, 0.0)],
-            "user_id bigint, ts timestamp, value double",
-        )
-        src = _stage_batches(tmp, (
-            ("early", ev.where(F.col("ts") <= F.lit(cut))),
-            ("spacer", ev.where(F.lit(False))),
-            ("late", ev.where(F.col("ts") > F.lit(cut))),
-            ("flush", flush),
-            ("spacer2", ev.where(F.lit(False))),
-        ))
-        spark.conf.set("spark.sql.shuffle.partitions", _STREAM_STATE_PARTS)
-        spark.conf.set(
-            prov_key,
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
-        )
-        spark.conf.set(
-            clog_key, _os.environ.get("SPARK_GRAFT_ROCKSDB_CHANGELOG", "true")
-        )
-        stream = (
-            spark.readStream.schema("user_id bigint, ts timestamp, value double")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        q = write_stream_idempotent(
-            timer_sessions(stream), sink, f"{tmp}/ckpt", output_mode="append"
-        )
-        _await_finite_stream(q, "q_stream_state_sessions")
-        snap = spark.read.option("basePath", sink).parquet(sink)
-        return snap.where(F.col("user_id") != -1).select(
-            "user_id",
-            F.col("session_start").cast("timestamp_ntz").alias("session_start"),
-            F.col("session_end").cast("timestamp_ntz").alias("session_end"),
-            "session_seq",
-            "n_events",
-            # Round ONCE on the read-back (Spark round = HALF_UP, away
-            # from zero — same as the oracle's DuckDB round); the
-            # processor emits full precision so no banker's-rounding
-            # Python round() sits inside the state layer (ADVICE r9).
-            F.round(F.col("sum_value"), 6).alias("sum_value"),
-        )
+        with _finite_stream(
+            spark,
+            "q_stream_state_sessions",
+            stages,
+            parts=_STREAM_STATE_PARTS,
+            conf=conf,
+        ) as run:
+            sink = run.sink(timer_sessions(run.stream()), "append")
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        if prev_prov is None:
-            spark.conf.unset(prov_key)
-        else:
-            spark.conf.set(prov_key, prev_prov)
-        if prev_clog is None:
-            spark.conf.unset(clog_key)
-        else:
-            spark.conf.set(clog_key, prev_clog)
         restore_env(spark, prev_env)
-        shutil.rmtree(tmp, ignore_errors=True)
+    return sink.where(F.col("user_id") != -1).select(
+        "user_id",
+        F.col("session_start").cast("timestamp_ntz").alias("session_start"),
+        F.col("session_end").cast("timestamp_ntz").alias("session_end"),
+        "session_seq",
+        "n_events",
+        # Round ONCE on the read-back (Spark round = HALF_UP, away from
+        # zero — same as the oracle's DuckDB round); the processor
+        # emits full precision so no banker's-rounding Python round()
+        # sits inside the state layer (ADVICE r9).
+        F.round(F.col("sum_value"), 6).alias("sum_value"),
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1201,91 +1102,41 @@ def q_state_reader_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     file per state partition — at 100 TB it is the standard offline
     audit of a live pipeline's checkpoint, never touching the stream.
     """
-    from project_map_reduce_spark.sources.sinks import write_stream_idempotent
-
-    ev0 = load(spark, sf_dir, "events").select("user_id", "ts", "value", "event_id")
-    if ev0.schema["ts"].dataType.simpleString() == "timestamp_ntz":
-        ev0 = ev0.withColumn("ts", F.to_timestamp_ltz("ts"))
-    # One fused plan-build job (_session_hi_cut); the degenerate
-    # no-in-session-pair corpus falls back to hi without a second job.
-    hi, cut = _session_hi_cut(ev0)
-    if cut is None:
-        cut = hi
-        if cut is None:
-            raise ValueError("q_state_reader_audit: events table is empty")
-    ev = ev0.select("user_id", "ts", "value")
-
-    tmp = tempfile.mkdtemp(prefix="pmrs_q140_")
-    sink = _session_output_dir("pmrs_q140_sink_")
-    # The checkpoint must OUTLIVE this call: the returned plan reads it
-    # lazily (statestore source), so it gets the session-persistent
-    # lifecycle, not the tmp/finally one.
-    ckpt = _session_output_dir("pmrs_q140_ckpt_")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        src = _stage_batches(tmp, (
-            ("early", ev.where(F.col("ts") <= F.lit(cut))),
-            ("spacer", ev.where(F.lit(False))),
-            ("late", ev.where(F.col("ts") > F.lit(cut))),
-        ))
-        spark.conf.set("spark.sql.shuffle.partitions", _STREAM_STATE_PARTS)
-        stream = (
-            spark.readStream.schema("user_id bigint, ts timestamp, value double")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        agg = (
-            stream.withWatermark("ts", f"{_SS_GAP_MIN} minutes")
-            .groupBy(
-                F.session_window("ts", f"{_SS_GAP_MIN} minutes"), "user_id"
-            )
-            .agg(
-                F.count(F.lit(1)).alias("n_events"),
-                r6d(F.sum("value"), "sum_value"),
-            )
-            .select(
-                "user_id",
-                F.col("session_window.start").alias("session_start"),
-                F.col("session_window.end").alias("session_end"),
-                "n_events",
-                "sum_value",
-            )
-        )
-        q = write_stream_idempotent(agg, sink, ckpt, output_mode="append")
-        _await_finite_stream(q, "q_state_reader_audit")
-
-        finalized = spark.read.option("basePath", sink).parquet(sink).select(
+    stages = _session_stages(spark, sf_dir, "q_state_reader_audit", flush=False)
+    with _finite_stream(
+        spark, "q_state_reader_audit", stages, parts=_STREAM_STATE_PARTS
+    ) as run:
+        finalized = run.sink(_session_window_agg(run.stream()), "append").select(
             "user_id", "session_start", "session_end", "n_events", "sum_value"
         )
-        open_state = spark.read.format("statestore").load(ckpt).select(
+        # The checkpoint sits in the session-scoped dir, so this lazy
+        # read outlives the run.
+        open_state = spark.read.format("statestore").load(run.ckpt).select(
             F.col("value.user_id").alias("user_id"),
             F.col("value.session_window.start").alias("session_start"),
             F.col("value.session_window.end").alias("session_end"),
             F.col("value.count").alias("n_events"),
             F.round(F.col("value.sum"), 6).alias("sum_value"),
         )
-        # Premise guards, loud: an empty side means the audit exercised
-        # nothing (no flush ⇒ the max-ts session MUST still be open).
-        if open_state.limit(1).count() == 0:
-            raise RuntimeError(
-                "q_state_reader_audit: state store is empty — no open "
-                "sessions survived; the no-flush premise broke"
-            )
-        if finalized.limit(1).count() == 0:
-            raise RuntimeError(
-                "q_state_reader_audit: append sink is empty — nothing "
-                "finalized; the staging premise broke"
-            )
-        return finalized.unionByName(open_state).select(
-            "user_id",
-            F.col("session_start").cast("timestamp_ntz").alias("session_start"),
-            F.col("session_end").cast("timestamp_ntz").alias("session_end"),
-            "n_events",
-            "sum_value",
+    # Premise guards, loud: an empty side means the audit exercised
+    # nothing (no flush ⇒ the max-ts session MUST still be open).
+    if open_state.limit(1).count() == 0:
+        raise RuntimeError(
+            "q_state_reader_audit: state store is empty — no open "
+            "sessions survived; the no-flush premise broke"
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        shutil.rmtree(tmp, ignore_errors=True)
+    if finalized.limit(1).count() == 0:
+        raise RuntimeError(
+            "q_state_reader_audit: append sink is empty — nothing "
+            "finalized; the staging premise broke"
+        )
+    return finalized.unionByName(open_state).select(
+        "user_id",
+        F.col("session_start").cast("timestamp_ntz").alias("session_start"),
+        F.col("session_end").cast("timestamp_ntz").alias("session_end"),
+        "n_events",
+        "sum_value",
+    )
 
 
 @register(
@@ -1347,51 +1198,24 @@ def q_stream_chained_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     distributed (SURVEY §4.2).
     """
     from project_map_reduce_spark.functions.det import sum6
-    from project_map_reduce_spark.sources.sinks import write_stream_idempotent
 
-    ev = load(spark, sf_dir, "events").select("ts", "event_type", "value")
-    if ev.schema["ts"].dataType.simpleString() == "timestamp_ntz":
-        ev = ev.withColumn("ts", F.to_timestamp_ltz("ts"))
-    lo, hi = ev.agg(F.min("ts"), F.max("ts")).first()
-    if lo is None or hi is None:
-        raise ValueError("events table is empty — nothing to stream")
-    span_us = max(1, int((hi - lo).total_seconds() * 1_000_000))
+    ev = X.ts_ltz(load(spark, sf_dir, "events").select("ts", "event_type", "value"))
+    stages, hi = _event_time_chunks(ev)
     day_bound = hi.replace(hour=0, minute=0, second=0, microsecond=0)
     sentinel_ts = day_bound + datetime.timedelta(days=1, hours=3)
-
-    tmp = tempfile.mkdtemp(prefix="pmrs_q148_")
-    out_dir = _session_output_dir("pmrs_q148_final_")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        frac = (
-            F.timestamp_diff("MICROSECOND", F.lit(lo), F.col("ts"))
-            / F.lit(span_us)
-        )
-        chunk = F.least(F.floor(frac * 3), F.lit(2))
-        sentinel = _literal_rows(
+    stages += [
+        ("sentinel", _literal_rows(
             spark, [(sentinel_ts, "__sentinel__", 0.0)],
             "ts timestamp, event_type string, value double",
-        )
-        src = _stage_batches(tmp, (
-            ("c0", ev.where(chunk == 0)),
-            ("c1", ev.where(chunk == 1)),
-            ("c2", ev.where(chunk == 2)),
-            ("sentinel", sentinel),
-            ("spacer", ev.where(F.lit(False))),
-        ))
-
-        # State is O(open windows) x 2 operators — a small constant
-        # beats cores-many state partitions (Q98's measured rationale).
-        spark.conf.set("spark.sql.shuffle.partitions", "4")
-        stream = (
-            spark.readStream.schema(
-                "ts timestamp, event_type string, value double"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
+        )),
+        ("spacer", ev.where(F.lit(False))),
+    ]
+    # State is O(open windows) x 2 operators — a small constant beats
+    # cores-many state partitions (Q98's measured rationale).
+    with _finite_stream(spark, "q_stream_chained_agg", stages, parts=4) as run:
         slots = (
-            stream.withWatermark("ts", "2 hours")
+            run.stream()
+            .withWatermark("ts", "2 hours")
             .groupBy(F.window("ts", "6 hours"), "event_type")
             .agg(
                 F.count(F.lit(1)).alias("n_events"),
@@ -1414,28 +1238,13 @@ def q_stream_chained_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "sum_value",
             )
         )
-        q = write_stream_idempotent(
-            days, f"{tmp}/sink", f"{tmp}/ckpt", output_mode="append"
-        )
-        _await_finite_stream(q, "q_stream_chained_agg")
-        snap = spark.read.option("basePath", f"{tmp}/sink").parquet(
-            f"{tmp}/sink"
-        )
-        (
-            snap.where(F.col("day_start") < F.lit(sentinel_ts))
-            .select(
-                F.col("day_start").cast("timestamp_ntz").alias("day_start"),
-                "n_slots",
-                "n_events",
-                "sum_value",
-            )
-            .write.mode("overwrite")
-            .parquet(out_dir)
-        )
-        return spark.read.parquet(out_dir)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        shutil.rmtree(tmp, ignore_errors=True)
+        sink = run.sink(days, "append")
+    return sink.where(F.col("day_start") < F.lit(sentinel_ts)).select(
+        F.col("day_start").cast("timestamp_ntz").alias("day_start"),
+        "n_slots",
+        "n_events",
+        "sum_value",
+    )
 
 
 @register(
@@ -1478,106 +1287,29 @@ def q_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     join's guarantee that state expiry EMITS rather than silently
     drops, which is what makes the unmatched side auditable at 100 TB.
     """
-    from project_map_reduce_spark.sources.sinks import write_stream_idempotent
-
-    ev = load(spark, sf_dir, "events").select(
-        "event_id", "ts", "user_id", "event_type"
+    ev = X.ts_ltz(
+        load(spark, sf_dir, "events").select("event_id", "ts", "user_id", "event_type")
     )
-    if ev.schema["ts"].dataType.simpleString() == "timestamp_ntz":
-        ev = ev.withColumn("ts", F.to_timestamp_ltz("ts"))
-    lo, hi = ev.agg(F.min("ts"), F.max("ts")).first()
-    if lo is None or hi is None:
-        raise ValueError("events table is empty — nothing to stream-join")
-    span_us = max(1, int((hi - lo).total_seconds() * 1_000_000))
+    stages, hi = _event_time_chunks(ev)
     sentinel_ts = hi + datetime.timedelta(hours=4)
-
-    tmp = tempfile.mkdtemp(prefix="pmrs_q152_")
-    out_dir = _session_output_dir("pmrs_q152_final_")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        frac = (
-            F.timestamp_diff("MICROSECOND", F.lit(lo), F.col("ts"))
-            / F.lit(span_us)
-        )
-        chunk = F.least(F.floor(frac * 3).cast("int"), F.lit(2))
-        sentinel = _literal_rows(
+    stages += [
+        ("sentinel", _literal_rows(
             spark,
             [
                 (-1, sentinel_ts, -1, "error"),
                 (-2, sentinel_ts, -1, "purchase"),
             ],
             "event_id bigint, ts timestamp, user_id bigint, event_type string",
-        )
-        src = _stage_batches(tmp, tuple(
-            (
-                f"c{i}",
-                ev.withColumn("__c", chunk)
-                .where(F.col("__c") == i)
-                .drop("__c"),
-            )
-            for i in range(3)
-        ) + (
-            ("sentinel", sentinel),
-            ("spacer", ev.where(F.lit(False))),
-        ))
-
-        # Two join state stores per partition (Q101's measured
-        # rationale): 8 state partitions beat cores at every probed SF.
-        spark.conf.set("spark.sql.shuffle.partitions", _STREAM_STATE_PARTS)
-
-        def src_stream():
-            return (
-                spark.readStream.schema(
-                    "event_id bigint, ts timestamp, user_id bigint, "
-                    "event_type string"
-                )
-                .option("maxFilesPerTrigger", 1)
-                .parquet(src)
-            )
-
-        err = (
-            src_stream()
-            .where(F.col("event_type") == "error")
-            .select(
-                F.col("user_id").alias("e_user"),
-                F.col("event_id").alias("err_id"),
-                F.col("ts").alias("err_ts"),
-            )
-            .withWatermark("err_ts", "2 hours")
-        )
-        pur = (
-            src_stream()
-            .where(F.col("event_type") == "purchase")
-            .select(
-                F.col("user_id").alias("p_user"),
-                F.col("event_id").alias("pur_id"),
-                F.col("ts").alias("pur_ts"),
-            )
-            .withWatermark("pur_ts", "2 hours")
-        )
-        joined = err.join(
-            pur,
-            F.expr(
-                "e_user = p_user AND pur_ts > err_ts "
-                "AND pur_ts <= err_ts + INTERVAL 1 HOUR"
-            ),
-            "leftOuter",
-        ).select("err_id", "pur_id")
-        q = write_stream_idempotent(
-            joined, f"{tmp}/sink", f"{tmp}/ckpt", output_mode="append"
-        )
-        _await_finite_stream(q, "q_stream_outer_join")
-        snap = spark.read.option("basePath", f"{tmp}/sink").parquet(f"{tmp}/sink")
-        (
-            snap.where(F.col("err_id") >= 0)
-            .select("err_id", "pur_id")
-            .write.mode("overwrite")
-            .parquet(out_dir)
-        )
-        return spark.read.parquet(out_dir)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        shutil.rmtree(tmp, ignore_errors=True)
+        )),
+        ("spacer", ev.where(F.lit(False))),
+    ]
+    # Two join state stores per partition (Q101's measured rationale):
+    # 8 state partitions beat cores at every probed SF.
+    with _finite_stream(
+        spark, "q_stream_outer_join", stages, parts=_STREAM_STATE_PARTS
+    ) as run:
+        sink = run.sink(_error_purchase_join(run, "leftOuter"), "append")
+    return sink.where(F.col("err_id") >= 0).select("err_id", "pur_id")
 
 
 _RATE_N = 1000          # rows per micro-batch
@@ -1628,12 +1360,7 @@ def q_rate_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import time
 
-    from project_map_reduce_spark.sources.sinks import write_stream_idempotent
-
-    tmp = tempfile.mkdtemp(prefix="pmrs_q160_")
-    out_dir = _session_output_dir("pmrs_q160_final_")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
+    with _finite_stream(spark, "q_rate_source", parts=4) as run:
         stream = (
             spark.readStream.format("rate-micro-batch")
             .option("rowsPerBatch", _RATE_N)
@@ -1642,11 +1369,10 @@ def q_rate_source(spark: SparkSession, sf_dir: str) -> DataFrame:
             .option("advanceMillisPerBatch", _RATE_ADV_MS)
             .load()
         )
-        spark.conf.set("spark.sql.shuffle.partitions", "4")
         q = write_stream_idempotent(
             stream,
-            f"{tmp}/sink",
-            f"{tmp}/ckpt",
+            run.sink_dir,
+            run.ckpt,
             trigger_available_now=False,
             output_mode="append",
         )
@@ -1658,11 +1384,11 @@ def q_rate_source(spark: SparkSession, sf_dir: str) -> DataFrame:
             done = [
                 d
                 for d in (
-                    os.listdir(f"{tmp}/sink") if os.path.isdir(f"{tmp}/sink") else []
+                    os.listdir(run.sink_dir) if os.path.isdir(run.sink_dir) else []
                 )
                 if d.startswith("batch_id=")
                 and int(d.split("=")[1]) < _RATE_BATCHES
-                and os.path.exists(f"{tmp}/sink/{d}/_SUCCESS")
+                and os.path.exists(f"{run.sink_dir}/{d}/_SUCCESS")
             ]
             if len(done) >= _RATE_BATCHES:
                 break
@@ -1674,23 +1400,17 @@ def q_rate_source(spark: SparkSession, sf_dir: str) -> DataFrame:
             raise RuntimeError("q_rate_source: 5 batches not committed in 120s")
         q.stop()
         q.awaitTermination(60)
-        snap = spark.read.option("basePath", f"{tmp}/sink").parquet(f"{tmp}/sink")
-        (
-            snap.where(F.col("batch_id") < _RATE_BATCHES)
-            .groupBy("batch_id")
-            .agg(
-                F.count(F.lit(1)).alias("n_rows"),
-                F.sum("value").alias("sum_value"),
-                F.countDistinct("timestamp").alias("n_ts"),
-                F.max(F.unix_millis("timestamp")).alias("ts_ms"),
-            )
-            .write.mode("overwrite")
-            .parquet(out_dir)
+        sink = run.read_sink()
+    return (
+        sink.where(F.col("batch_id") < _RATE_BATCHES)
+        .groupBy("batch_id")
+        .agg(
+            F.count(F.lit(1)).alias("n_rows"),
+            F.sum("value").alias("sum_value"),
+            F.countDistinct("timestamp").alias("n_ts"),
+            F.max(F.unix_millis("timestamp")).alias("ts_ms"),
         )
-        return spark.read.parquet(out_dir)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        shutil.rmtree(tmp, ignore_errors=True)
+    )
 
 
 @register(
@@ -1739,114 +1459,103 @@ def q_pyds_stream_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     register_report_sink(spark)
     ev = load(spark, sf_dir, "events").select("event_id", "event_type", "value")
-    tmp = tempfile.mkdtemp(prefix="pmrs_q163_")
-    out = f"{tmp}/report"
-    try:
-        lo_hi = ev.agg(F.min("event_id"), F.max("event_id")).first()
-        span = max(1, int(lo_hi[1]) - int(lo_hi[0]) + 1)
-        chunk = F.least(
-            F.floor((F.col("event_id") - F.lit(int(lo_hi[0]))) * 3 / span),
-            F.lit(2),
-        )
-        src = _stage_batches(tmp, tuple(
-            (f"c{i}", ev.where(chunk == i)) for i in range(3)
-        ))
-        stream = (
-            spark.readStream.schema(
-                "event_id bigint, event_type string, value double"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
+    lo_hi = ev.agg(F.min("event_id"), F.max("event_id")).first()
+    span = max(1, int(lo_hi[1]) - int(lo_hi[0]) + 1)
+    chunk = F.least(
+        F.floor((F.col("event_id") - F.lit(int(lo_hi[0]))) * 3 / span),
+        F.lit(2),
+    )
+    stages = [(f"c{i}", ev.where(chunk == i)) for i in range(3)]
+    with _finite_stream(spark, "q_pyds_stream_sink", stages) as run:
+        out = run.sink_dir
         q = (
-            stream.writeStream.format("pmrs_report")
+            run.stream()
+            .writeStream.format("pmrs_report")
             .option("path", out)
-            .option("checkpointLocation", f"{tmp}/ckpt")
+            .option("checkpointLocation", run.ckpt)
             .trigger(availableNow=True)
             .start()
         )
         _await_finite_stream(q, "q_pyds_stream_sink")
 
-        import os
+    import os
 
-        manifests = sorted(
-            f for f in os.listdir(out) if f.startswith("_MANIFEST-")
+    manifests = sorted(
+        f for f in os.listdir(out) if f.startswith("_MANIFEST-")
+    )
+    if len(manifests) < 3:
+        raise ValueError(
+            f"q_pyds_stream_sink: expected >=3 committed epochs, "
+            f"got {manifests}"
         )
-        if len(manifests) < 3:
+    # Parse the tiny manifests driver-side: per-part expectations
+    # plus per-epoch totals (O(parts) lines).
+    want_part: dict[str, tuple[int, int]] = {}  # fname -> (rows, xor)
+    want_epoch: dict[str, tuple[int, int, list[str]]] = {}
+    for mf in manifests:
+        head, *body = open(f"{out}/{mf}").read().splitlines()
+        parts = [entry.split("\t")[0] for entry in body]
+        for entry in body:
+            fname, n_rows, xor = entry.split("\t")
+            want_part[fname] = (int(n_rows), int(xor))
+        want_epoch[mf] = (
+            int(head.split("\t")[1]),
+            int(head.split("\t")[3]),
+            parts,
+        )
+    # Verification AND the aggregate are DISTRIBUTED, in ONE scan
+    # (the r11 sf10 probe showed the former per-line driver loop
+    # dominating the whole query at 10 M rows): a single text scan
+    # over exactly the manifest-listed parts groups by
+    # (part, event_type), computing per-cell row counts, the md5
+    # line-xor via the BIGINT bit_xor aggregate (LINE_HASH_SQL is
+    # the exact Spark twin of the writer's _line_hash —
+    # test-pinned), and the exact-decimal value sum
+    # (CAST(... AS DECIMAL(27,6)) quantizes HALF_UP exactly like
+    # the oracle — the ADVICE-r9 rounding contract). Only the
+    # O(parts x types) cell summary reaches the driver; both the
+    # ledger checks and the final aggregate re-lift from it.
+    fields = F.split(F.col("value"), "\t")
+    cells = (
+        spark.read.text([f"{out}/{p}" for p in want_part])
+        .select(
+            F.col("_metadata.file_name").alias("part"),
+            F.expr(LINE_HASH_SQL).alias("h"),
+            fields.getItem(1).alias("event_type"),
+            fields.getItem(2).cast("decimal(27,6)").alias("v"),
+        )
+        .groupBy("part", "event_type")
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.bit_xor("h").alias("x"),
+            F.sum("v").alias("s"),
+        )
+        .collect()
+    )
+    got_part: dict[str, tuple[int, int]] = {}
+    for r in cells:
+        n, x = got_part.get(r["part"], (0, 0))
+        got_part[r["part"]] = (n + r["n"], x ^ r["x"])
+    for fname, (n_rows, xor) in want_part.items():
+        if got_part.get(fname, (0, 0)) != (n_rows, xor):
             raise ValueError(
-                f"q_pyds_stream_sink: expected >=3 committed epochs, "
-                f"got {manifests}"
+                f"q_pyds_stream_sink: part {fname} disagrees with "
+                f"its manifest entry"
             )
-        # Parse the tiny manifests driver-side: per-part expectations
-        # plus per-epoch totals (O(parts) lines).
-        want_part: dict[str, tuple[int, int]] = {}  # fname -> (rows, xor)
-        want_epoch: dict[str, tuple[int, int, list[str]]] = {}
-        for mf in manifests:
-            head, *body = open(f"{out}/{mf}").read().splitlines()
-            parts = [entry.split("\t")[0] for entry in body]
-            for entry in body:
-                fname, n_rows, xor = entry.split("\t")
-                want_part[fname] = (int(n_rows), int(xor))
-            want_epoch[mf] = (
-                int(head.split("\t")[1]),
-                int(head.split("\t")[3]),
-                parts,
+    for mf, (total, xor, parts) in want_epoch.items():
+        got_n = sum(got_part.get(p, (0, 0))[0] for p in parts)
+        got_x = 0
+        for p in parts:
+            got_x ^= got_part.get(p, (0, 0))[1]
+        if (got_n, got_x) != (total, xor):
+            raise ValueError(
+                f"q_pyds_stream_sink: epoch {mf} totals disagree"
             )
-        # Verification AND the aggregate are DISTRIBUTED, in ONE scan
-        # (the r11 sf10 probe showed the former per-line driver loop
-        # dominating the whole query at 10 M rows): a single text scan
-        # over exactly the manifest-listed parts groups by
-        # (part, event_type), computing per-cell row counts, the md5
-        # line-xor via the BIGINT bit_xor aggregate (LINE_HASH_SQL is
-        # the exact Spark twin of the writer's _line_hash —
-        # test-pinned), and the exact-decimal value sum
-        # (CAST(... AS DECIMAL(27,6)) quantizes HALF_UP exactly like
-        # the oracle — the ADVICE-r9 rounding contract). Only the
-        # O(parts x types) cell summary reaches the driver; both the
-        # ledger checks and the final aggregate re-lift from it.
-        fields = F.split(F.col("value"), "\t")
-        cells = (
-            spark.read.text([f"{out}/{p}" for p in want_part])
-            .select(
-                F.col("_metadata.file_name").alias("part"),
-                F.expr(LINE_HASH_SQL).alias("h"),
-                fields.getItem(1).alias("event_type"),
-                fields.getItem(2).cast("decimal(27,6)").alias("v"),
-            )
-            .groupBy("part", "event_type")
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.bit_xor("h").alias("x"),
-                F.sum("v").alias("s"),
-            )
-            .collect()
-        )
-        got_part: dict[str, tuple[int, int]] = {}
-        for r in cells:
-            n, x = got_part.get(r["part"], (0, 0))
-            got_part[r["part"]] = (n + r["n"], x ^ r["x"])
-        for fname, (n_rows, xor) in want_part.items():
-            if got_part.get(fname, (0, 0)) != (n_rows, xor):
-                raise ValueError(
-                    f"q_pyds_stream_sink: part {fname} disagrees with "
-                    f"its manifest entry"
-                )
-        for mf, (total, xor, parts) in want_epoch.items():
-            got_n = sum(got_part.get(p, (0, 0))[0] for p in parts)
-            got_x = 0
-            for p in parts:
-                got_x ^= got_part.get(p, (0, 0))[1]
-            if (got_n, got_x) != (total, xor):
-                raise ValueError(
-                    f"q_pyds_stream_sink: epoch {mf} totals disagree"
-                )
-        agg: dict[str, tuple[int, object]] = {}
-        for r in cells:
-            c, s = agg.get(r["event_type"], (0, 0))
-            agg[r["event_type"]] = (c + r["n"], s + r["s"])
-        rows = [(t, c, float(s)) for t, (c, s) in sorted(agg.items())]
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    agg: dict[str, tuple[int, object]] = {}
+    for r in cells:
+        c, s = agg.get(r["event_type"], (0, 0))
+        agg[r["event_type"]] = (c + r["n"], s + r["s"])
+    rows = [(t, c, float(s)) for t, (c, s) in sorted(agg.items())]
     return local_rows(
         spark,
         rows, schema="event_type string, n_events bigint, sum_value double"

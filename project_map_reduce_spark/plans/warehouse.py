@@ -438,9 +438,6 @@ def q_stream_mv_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     Driver-collect note: the refreshed MV is O(types × days) = 150
     rows at any corpus size (the Q96/Q117 pattern).
     """
-    import shutil
-    import tempfile
-
     from project_map_reduce_spark.operators.mv import (
         mv_finalize,
         mv_read,
@@ -448,7 +445,7 @@ def q_stream_mv_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from project_map_reduce_spark.plans.streaming_shaped import (
         _await_finite_stream,
-        _stage_batches,
+        _finite_stream,
     )
 
     ev = load(spark, sf_dir, "events").select(
@@ -459,35 +456,22 @@ def q_stream_mv_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     keys = ["event_type", "day"]
     sums = {"sum_value": "value"}
-    tmp = tempfile.mkdtemp(prefix="q_stream_mv_")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        src = _stage_batches(tmp, tuple(
-            (f"c{i}", ev.where(F.col("event_id") % 3 == i).drop("event_id"))
-            for i in range(3)
-        ))
-        # The per-batch merge shuffles O(types×days)=150 partial rows
-        # and each version write produces one file per post-shuffle
-        # partition: 32 shuffle partitions meant 32 tasks + 32-file
-        # versions PER BATCH for 150 rows (measured 9.5 s). Pin small —
-        # the q_stream_sessions small-state lesson applied to the merge
-        # job; a big-MV deployment sizes this to |MV|/128MB instead.
-        spark.conf.set("spark.sql.shuffle.partitions", "2")
-        stream = (
-            spark.readStream.schema(
-                "event_type string, day timestamp, value double"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        q = mv_stream_refresh(stream, f"{tmp}/mv", f"{tmp}/ckpt", keys, sums)
+    stages = [
+        (f"c{i}", ev.where(F.col("event_id") % 3 == i).drop("event_id"))
+        for i in range(3)
+    ]
+    # The per-batch merge shuffles O(types×days)=150 partial rows and
+    # each version write produces one file per post-shuffle partition:
+    # 32 shuffle partitions meant 32 tasks + 32-file versions PER BATCH
+    # for 150 rows (measured 9.5 s). Pin small — the q_stream_sessions
+    # small-state lesson applied to the merge job; a big-MV deployment
+    # sizes this to |MV|/128MB instead.
+    with _finite_stream(spark, "q_stream_mv_refresh", stages, parts=2) as run:
+        q = mv_stream_refresh(run.stream(), run.sink_dir, run.ckpt, keys, sums)
         _await_finite_stream(q, "q_stream_mv_refresh")
-        rows = mv_finalize(mv_read(spark, f"{tmp}/mv"), sums).select(
+        rows = mv_finalize(mv_read(spark, run.sink_dir), sums).select(
             "event_type", "day", "n_events", "sum_value"
         ).collect()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        shutil.rmtree(tmp, ignore_errors=True)
     return local_rows(
         spark,
         rows,
@@ -722,37 +706,27 @@ def q_stream_to_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-run must start from CREATE, which is itself part of what the
     toTable contract covers).
     """
-    import shutil
-    import tempfile
     import uuid
 
     from project_map_reduce_spark.plans.streaming_shaped import (
         _await_finite_stream,
-        _stage_batches,
+        _finite_stream,
     )
 
     ev = load(spark, sf_dir, "events").select(
         "event_id", "event_type", "user_id", "value"
     )
-    tmp = tempfile.mkdtemp(prefix="q_stream_to_table_")
+    stages = [(f"c{i}", ev.where(F.col("event_id") % 3 == i)) for i in range(3)]
     table = f"pmrs_stream_tbl_{uuid.uuid4().hex[:8]}"
     try:
-        src = _stage_batches(tmp, tuple(
-            (f"c{i}", ev.where(F.col("event_id") % 3 == i))
-            for i in range(3)
-        ))
-        q = (
-            spark.readStream.schema(
-                "event_id bigint, event_type string, "
-                "user_id bigint, value double"
+        with _finite_stream(spark, "q_stream_to_table", stages) as run:
+            q = (
+                run.stream()
+                .writeStream.option("checkpointLocation", run.ckpt)
+                .trigger(availableNow=True)
+                .toTable(table)
             )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-            .writeStream.option("checkpointLocation", f"{tmp}/ckpt")
-            .trigger(availableNow=True)
-            .toTable(table)
-        )
-        _await_finite_stream(q, "q_stream_to_table")
+            _await_finite_stream(q, "q_stream_to_table")
         rows = (
             spark.read.table(table)
             .groupBy("event_type")
@@ -765,7 +739,6 @@ def q_stream_to_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {table}")
-        shutil.rmtree(tmp, ignore_errors=True)
     return local_rows(
         spark,
         rows,

@@ -76,19 +76,10 @@ def get_spark(
     # for both state-heavy streams and it wins or ties wherever state fits
     # executor memory (RocksDB's native write path + changelog upload cost
     # ~1.8x on q_stream_totals at sf10). RocksDB is the right provider only
-    # once per-partition state outgrows the heap — flip it with
-    # SPARK_GRAFT_STATE_STORE=rocksdb (changelog checkpointing included, so
-    # checkpoint commits upload deltas instead of full SST snapshots).
-    if os.environ.get("SPARK_GRAFT_STATE_STORE", "").lower() == "rocksdb":
-        builder = builder.config(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
-        ).config(
-            "spark.sql.streaming.stateStore.rocksdb."
-            "changelogCheckpointing.enabled",
-            "true",
-        )
+    # once per-partition state outgrows the heap; a deployment that needs
+    # it passes the provider (and changelog checkpointing) via
+    # ``extra_conf``. q_stream_state_sessions sets both for its own run,
+    # because transformWithState requires RocksDB.
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

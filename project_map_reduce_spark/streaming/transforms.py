@@ -21,19 +21,21 @@ from pyspark.sql import functions as F
 from project_map_reduce_spark.functions.det import r6d
 
 
-def with_watermark(df: DataFrame, delay: str = "10 minutes") -> DataFrame:
-    """Declare allowed event-time lateness (state-eviction horizon).
+def ts_ltz(df: DataFrame) -> DataFrame:
+    """``df`` with its ``ts`` column as TIMESTAMP (LTZ).
 
-    Spark's watermark tracker only accepts TIMESTAMP (LTZ); the events
-    fixture reads as TIMESTAMP_NTZ on Spark ≥4.1, so cast here. The
-    engine session pins the zone to UTC (session.py), making the cast
-    value-exact; streaming is a capability surface (no DuckDB oracle),
-    so the LTZ flavor never reaches a hash comparison.
-    """
-    ts_type = df.schema["ts"].dataType.simpleString()
-    if ts_type == "timestamp_ntz":
-        df = df.withColumn("ts", F.to_timestamp_ltz("ts"))
-    return df.withWatermark("ts", delay)
+    Spark's watermark tracker only accepts LTZ; the events fixture reads
+    as TIMESTAMP_NTZ on Spark ≥4.1, so cast here. The engine session
+    pins the zone to UTC (session.py), making the cast value-exact."""
+    if df.schema["ts"].dataType.simpleString() == "timestamp_ntz":
+        return df.withColumn("ts", F.to_timestamp_ltz("ts"))
+    return df
+
+
+def with_watermark(df: DataFrame, delay: str = "10 minutes") -> DataFrame:
+    """Declare allowed event-time lateness (state-eviction horizon) on
+    ``ts`` (cast to LTZ first, see ``ts_ltz``)."""
+    return ts_ltz(df).withWatermark("ts", delay)
 
 
 def tumbling_counts(events: DataFrame) -> DataFrame:

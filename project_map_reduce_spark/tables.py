@@ -50,16 +50,17 @@ def footer_rows(path: str) -> int:
     import pyarrow.parquet as pq
 
     if os.path.isdir(path):
-        parts = sorted(
+        parts = {
             f
             for f in glob.glob(os.path.join(path, "*.parquet"))
             + glob.glob(os.path.join(path, "part-*"))
-            if not os.path.basename(f).startswith(("_", "."))
+            if os.path.isfile(f)
+            and not os.path.basename(f).startswith(("_", "."))
             and not f.endswith(".crc")
-        )
+        }
         if not parts:
             raise FileNotFoundError(f"no parquet part files under {path}")
-        return sum(pq.ParquetFile(p).metadata.num_rows for p in set(parts))
+        return sum(pq.ParquetFile(p).metadata.num_rows for p in parts)
     return pq.ParquetFile(path).metadata.num_rows
 
 

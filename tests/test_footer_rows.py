@@ -46,3 +46,14 @@ def test_matches_fixture_events_table():
     if not os.path.exists(path):
         pytest.skip("fixture not present")
     assert footer_rows(path) == pq.ParquetFile(path).metadata.num_rows
+
+
+def test_part_named_subdirectory_is_skipped(tmp_path):
+    """A ``part-*`` or ``*.parquet`` entry that is a directory (a nested
+    writer output) is not a part file; only the files count."""
+    d = tmp_path / "t.parquet"
+    d.mkdir()
+    pq.write_table(pa.table({"x": list(range(4))}), str(d / "part-00000.parquet"))
+    (d / "part-00001").mkdir()
+    (d / "nested.parquet").mkdir()
+    assert footer_rows(str(d)) == 4

@@ -451,6 +451,28 @@ def test_watermark_late_returns_distributed_snapshot(spark, sf_dir):
         )
 
 
+def test_finite_stream_plumbing_lives_in_the_runner():
+    """Every finite stream in B.9 runs through ``_finite_stream``: the
+    shuffle-partition conf is read, and a stream source is declared
+    from a staged schema, only inside that runner, and no query copies
+    its finished sink into a second ``out_dir`` parquet — so the
+    per-query save/restore and re-write plumbing cannot creep back."""
+    import inspect
+
+    from project_map_reduce_spark.plans import streaming_shaped as mod
+
+    src = inspect.getsource(mod)
+    runner = inspect.getsource(mod._finite_stream)
+    stream_cls = inspect.getsource(mod._FiniteStream)
+    for needle, home in (
+        ('"spark.sql.shuffle.partitions"', runner),
+        ("spark.conf.get(", runner),
+        ("readStream.schema(", stream_cls),
+    ):
+        assert src.count(needle) == 1 == home.count(needle), needle
+    assert "out_dir" not in src
+
+
 def test_quality_classifier_is_shuffle_free(spark, sf_dir):
     """Q102's hashed-bigram linear scoring must be a pure narrow map —
     hash + weight fold inside Catalyst HOFs, no Exchange and no Python

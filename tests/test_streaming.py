@@ -461,17 +461,73 @@ def test_interval_stream_rejects_empty_events(spark, sf_dir, tmp_path):
 
 def test_stream_queries_return_distributed_reads(spark, sf_dir):
     """The r4 VERDICT flagged q_stream_totals' driver-side collect():
-    both finite-stream queries must now return a LAZY parquet read of
-    the executor-written snapshot — a FileScan in the physical plan,
-    never a LocalTableScan of driver-collected rows (SURVEY §4.2)."""
+    finite-stream queries must return a LAZY parquet read of the
+    executor-written sink — a FileScan in the physical plan, never a
+    LocalTableScan of driver-collected rows (SURVEY §4.2)."""
     from project_map_reduce_spark.registry import entries
 
-    for name in ("q_stream_totals", "q_watermark_late"):
+    for name in (
+        "q_stream_totals",
+        "q_watermark_late",
+        "q_stream_dedup_watermark",
+        "q_join_interval_stream",
+        "q_stream_chained_agg",
+        "q_stream_outer_join",
+        "q_rate_source",
+    ):
         df = entries()[name].fn(spark, sf_dir)
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "LocalTableScan" not in plan, f"{name} gathers on the driver"
         assert "FileScan parquet" in plan, f"{name} is not a parquet read"
         assert df.count() > 0
+
+
+def test_finite_stream_restores_conf_and_scratch_on_failure(spark):
+    """The finite-stream runner owns the run's conf and scratch dir: a
+    stream that fails inside it must still restore the shuffle-partition
+    value, unset the state-store keys that were unset before, and
+    remove the staged source."""
+    from pyspark.errors import StreamingQueryException
+
+    from project_map_reduce_spark.plans.streaming_shaped import _finite_stream
+
+    store = "spark.sql.streaming.stateStore"
+    keys = (
+        f"{store}.providerClass",
+        f"{store}.rocksdb.changelogCheckpointing.enabled",
+    )
+    saved = {k: spark.conf.get(k, None) for k in keys}
+    parts = spark.conf.get("spark.sql.shuffle.partitions")
+    for k in keys:
+        spark.conf.unset(k)
+    conf = {
+        keys[0]: "org.apache.spark.sql.execution.streaming.state."
+        "RocksDBStateStoreProvider",
+        keys[1]: "true",
+    }
+    stages = [("only", spark.range(5).withColumnRenamed("id", "x"))]
+    try:
+        with pytest.raises(StreamingQueryException, match="runner boom"):
+            with _finite_stream(
+                spark, "runner_failure", stages, parts=3, conf=conf
+            ) as run:
+                scratch = run.tmp
+                assert os.path.isdir(scratch)
+                assert spark.conf.get("spark.sql.shuffle.partitions") == "3"
+                assert spark.conf.get(keys[1]) == "true"
+                run.sink(
+                    run.stream().select(F.raise_error(F.lit("runner boom"))),
+                    "append",
+                )
+        assert spark.conf.get("spark.sql.shuffle.partitions") == parts
+        assert all(spark.conf.get(k, None) is None for k in keys)
+        assert not os.path.exists(scratch)
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 def test_stream_static_join_is_broadcast_and_stateless(spark, sf_dir, tmp_path):
@@ -690,11 +746,12 @@ def test_session_merge_state_recovers_after_crash(spark, tmp_path):
 
 
 def test_rocksdb_state_store_provider_runs_green(spark, sf_dir, tmp_path):
-    """The documented flip (SPARK_GRAFT_STATE_STORE=rocksdb, session.py)
-    must be a working path, not a comment: run a stateful aggregate
-    under the RocksDB provider and assert both the answer (equals the
-    batch aggregate) and that the RocksDB store actually served it
-    (its custom metrics appear in the state operator's progress)."""
+    """The RocksDB provider (what a deployment whose state outgrows
+    the heap passes to get_spark's ``extra_conf``, session.py) must be
+    a working path, not a comment: run a stateful aggregate under it
+    and assert both the answer (equals the batch aggregate) and that
+    the RocksDB store actually served it (its custom metrics appear in
+    the state operator's progress)."""
     key = "spark.sql.streaming.stateStore.providerClass"
     prev = spark.conf.get(key)
     spark.conf.set(
